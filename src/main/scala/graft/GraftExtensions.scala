@@ -17,10 +17,10 @@ import graft.functions.HistogramSketch
   *  - `graft_dot(a, b)` — the codegen'd array dot product behind the ANN
   *    similarity paths;
   *  - `topk_sketch(key, payload, k)` — the K-bounded deterministic
-  *    top-K aggregate behind violation-sample caps;
-  *  - `tdigest_sketch(col, compression)` / `tdigest_quantile(digest, q)`
-  *    — the mergeable t-digest quantile sketch (north_star's named
-  *    at-scale quantile path).
+  *    top-K aggregate behind violation-sample caps.
+  *
+  * The quantile sketch needs no injection: it is Spark's built-in KLL
+  * (`kll_sketch_agg_double` and its readers, see [[graft.functions.Kll]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -32,18 +32,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("topk_sketch"),
       new ExpressionInfo(classOf[graft.functions.TopKSketch].getName, "topk_sketch"),
       (exprs: Seq[Expression]) => graft.functions.TopKSketch.fromExpressions(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("tdigest_sketch"),
-      new ExpressionInfo(classOf[graft.functions.TDigestSketch].getName, "tdigest_sketch"),
-      (exprs: Seq[Expression]) => graft.functions.TDigestSketch.fromExpressions(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("tdigest_quantile"),
-      new ExpressionInfo(classOf[graft.functions.TDigestQuantile].getName, "tdigest_quantile"),
-      (exprs: Seq[Expression]) => graft.functions.TDigestSketch.quantileFromExpressions(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("tdigest_cdf"),
-      new ExpressionInfo(classOf[graft.functions.TDigestCdf].getName, "tdigest_cdf"),
-      (exprs: Seq[Expression]) => graft.functions.TDigestSketch.cdfFromExpressions(exprs)))
     ext.injectFunction((
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[graft.functions.DotProduct].getName, "graft_dot"),

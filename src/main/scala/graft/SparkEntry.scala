@@ -56,18 +56,24 @@ object SparkEntry {
     if (!ScanFloorEnabled) return df
     val target = s.sparkContext.defaultParallelism
     // width the scan could reach at the most generous split size — pure
-    // file-metadata arithmetic (planning an RDD here costs ~0.1 s per
-    // call); Hadoop FS API so hdfs:/s3a: inputs size correctly too, and
-    // any metadata failure falls safe to "wide enough" (no extra exchange)
-    val bytes =
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p).getLen
-      } catch { case _: Exception => Long.MaxValue }
-    val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
-    val reachableTasks = (bytes + maxSplit - 1) / maxSplit
+    // file-metadata arithmetic (planning an RDD here costs ~0.1 s per call)
+    val reachableTasks = scanTasks(inputBytes(s, path), s.sessionState.conf.filesMaxPartitionBytes)
     if (reachableTasks < target) df.repartition(target) else df
   }
+
+  /** Bytes under `path` through the Hadoop FS API (so hdfs:/s3a: inputs
+    * size correctly too): a directory table counts all of its files. Any
+    * metadata failure reads as `Long.MaxValue`, which falls safe to "wide
+    * enough" (no extra exchange). */
+  private[graft] def inputBytes(s: SparkSession, path: String): Long =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
+    } catch { case _: Exception => Long.MaxValue }
+
+  /** ceil(bytes / maxSplit), without the overflow of `bytes + maxSplit - 1`. */
+  private[graft] def scanTasks(bytes: Long, maxSplit: Long): Long =
+    bytes / maxSplit + (if (bytes % maxSplit == 0) 0 else 1)
 
   /** A/B switch for [[scanFloor]] (`GRAFT_SCAN_FLOOR=0` disables) — used to
     * record the floor's effect in OPTIMIZATION_r06.md and as the opt-out
@@ -157,6 +163,9 @@ object SparkEntry {
       .withColumn("ts", col("ts").cast("timestamp"))
   }
 
+  /** State-store count of the streaming oracle entries (see [[runToMemorySink]]). */
+  private val StreamShufflePartitions = 8
+
   /** Run a streaming query to completion into a uniquely-named memory sink
     * (AvailableNow + trailing watermark batch) and return the sink table.
     *
@@ -166,17 +175,17 @@ object SparkEntry {
     * micro-batch). The replayed windows/keys here hold kilobytes of state,
     * so the session's CPU-width default (32) provisions 32 stores per
     * stateful operator to shuffle a few hundred counter rows — measured
-    * 2.1 s vs 1.0 s per run at 8. `GRAFT_STREAM_SHUFFLE` (default 8)
-    * parameterises it; size it to state volume / throughput in
-    * production. Results are partition-count-independent (exact counters
-    * and per-key state; the st06 digest's merge order shifts but its
-    * oracle pins only rank-tolerance claims). */
+    * 2.1 s vs 1.0 s per run at 8, hence [[StreamShufflePartitions]].
+    * Results are partition-count-independent (exact counters and per-key
+    * state; the st06 sketch's merge order shifts but its oracle pins only
+    * rank-tolerance claims). The session conf is set and restored around
+    * the run, so concurrent queries on the same session would see it:
+    * the callers run sequentially. */
   private def runToMemorySink(s: SparkSession, out: DataFrame, prefix: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val sink = s"${prefix}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8"))
+    s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
     try {
       val q = out.writeStream.format("memory").queryName(sink)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
@@ -611,16 +620,16 @@ object SparkEntry {
     }),
 
     "v47_drift_sketched" -> ((s, dir) => {
-      // north_star composed end to end: the t-digest as the STORED
-      // snapshot artifact for distribution-drift checks — PSI/KL computed
-      // from two digests via tdigest_cdf (Drift.psiSketched/klSketched;
-      // neither snapshot is rescanned once its digest exists) and judged
-      // against the exact histogram PSI/KL over the same binning. The
-      // sketch value is merge-order-dependent, so the oracle pins the
-      // portable pair: the EXACT distances plus the claim that the
-      // sketched ones landed within 0.01 absolute (measured gap at sf0.01
-      // is ~2.5e-4 — 40× headroom; TDigestSpec pins the tracking law on a
-      // strongly-drifted fixture where PSI > 0.2)
+      // north_star composed end to end: the KLL sketch (graft.functions.Kll)
+      // as the STORED snapshot artifact for distribution-drift checks —
+      // PSI/KL/JS computed from two sketches via their rank function
+      // (Drift.psiSketched/klSketched/jsSketched; neither snapshot is
+      // rescanned once its sketch exists) and judged against the exact
+      // histogram distances over the same binning. KLL compaction is
+      // randomized, so the oracle pins the portable pair: the EXACT
+      // distances plus the claim that the sketched ones landed within 0.01
+      // absolute (KllSketchSpec's adversarial drift cases measure a worst
+      // gap of 0.0017 at Kll.K = 8000)
       val li = tNoFloor(s, dir, "lineitem")
       val ref = li.where(col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
       val cur = li.where(col("l_shipdate") >= lit("1998-01-01").cast("timestamp"))
@@ -640,24 +649,23 @@ object SparkEntry {
     }),
 
     "v45_tdigest_quantiles" -> ((s, dir) => {
-      // t-digest quantile sketch (the north-star's NAMED at-scale quantile
-      // path; public algorithm: Dunning & Ertl's merging digest). Centroid
-      // layout is merge-order-dependent, so the oracle pins what is
-      // portable: the EXACT R-7 quantile (v24 parity) plus the claim that
-      // the sketch landed within 0.02 RANK error. The rank check is
-      // interval-form — P(X < est) − eps ≤ q ≤ P(X ≤ est) + eps — so a
-      // discrete column whose atoms carry 9% mass each (l_discount) is
-      // judged fairly: an atom contributes its whole mass to the pass
-      // interval. Spec'd bound at compression 300 is <0.01 (TDigestSpec),
-      // giving the gate 2× headroom.
-      graft.functions.TDigestSketch.register(s)
+      // (the query name keeps "tdigest": oracleSql keys are frozen.)
+      // Quantile sketch (the north-star's NAMED at-scale quantile path),
+      // Spark's built-in KLL via graft.functions.Kll. KLL compaction
+      // is randomized, so the oracle pins what is portable: the EXACT R-7
+      // quantile (v24 parity) plus the claim that the sketch landed within
+      // 0.02 RANK error. The rank check is interval-form —
+      // P(X < est) − eps ≤ q ≤ P(X ≤ est) + eps — so a discrete column
+      // whose atoms carry 9% mass each (l_discount) is judged fairly: an
+      // atom contributes its whole mass to the pass interval.
+      // KllSketchSpec's adversarial worst case at Kll.K = 8000 is 0.0002.
       val cols = Seq("l_quantity", "l_extendedprice", "l_discount")
       val qs = Seq(0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
       val li = t(s, dir, "lineitem")
-      // pass 1: ONE digest aggregation; the collect touches |cols|×|qs|
+      // pass 1: ONE sketch aggregation; the collect touches |cols|×|qs|
       // scalar estimates (tiny), mirroring the PackInference pattern
       val ests: Map[(String, Double), Double] =
-        ColumnStats.quantileDigest(li, cols, qs, compression = 300)
+        ColumnStats.quantileDigest(li, cols, qs)
           .collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
       // pass 2: ONE exact aggregation — R-7 quantiles + the rank interval
       // of each estimate via counter sums against literal estimates
@@ -1304,27 +1312,23 @@ object SparkEntry {
     }),
 
     "st06_stream_quantile_digest" -> ((s, dir) => {
-      // the t-digest as a STREAMING sketch (same replay harness as
-      // st03-st05): one digest row per closed 4-hour window. The digest
-      // bytes are merge-order-dependent, so the oracle pins the portable
-      // pair — the EXACT non-null row count per window (the digest's
-      // conserved weight) and the claim that the windowed median estimate
-      // landed within rank tolerance of the window's own distribution
-      // (v45's interval form: lt/n − tol ≤ 0.5 ≤ le/n + tol, so discrete
-      // atoms are judged fairly). tol = max(0.02, 2/n): quantile()
-      // interpolates BETWEEN points, so a tiny window's estimate can
-      // legitimately sit up to ~1/(2n) past the midpoint rank (twice that
-      // when equal values merged into one centroid) — without the n-term
-      // a marginal small window could flip on merge order and flake the
-      // gate. The rank counters come from a batch pass over the same
-      // events joined to the BROADCAST window table.
-      graft.functions.TDigestSketch.register(s)
+      // the KLL sketch as a STREAMING sketch (same replay harness as
+      // st03-st05): one sketch row per closed 4-hour window. KLL compaction
+      // is randomized, so the oracle pins the portable pair — the EXACT
+      // non-null row count per window and the claim that the windowed
+      // median estimate landed within rank tolerance of the window's own
+      // distribution (v45's interval form: lt/n − tol ≤ 0.5 ≤ le/n + tol,
+      // so discrete atoms are judged fairly). tol = max(0.02, 2/n) keeps
+      // the small-window slack the gate has always had; KLL's estimate is a
+      // stored value, exact below Kll.K values per window. The rank
+      // counters come from a batch pass over the same events joined to the
+      // BROADCAST window table.
       val stream = stagedEventStream(s, dir, "st06_events")
       val digests = runToMemorySink(s, graft.streaming.StreamingValidate
           .windowedQuantileDigest(stream, "ts", "value", "4 hours", "30 minutes"),
           "st06_sink")
         .select(col("window_start").cast("long").as("window_start"),
-          graft.functions.TDigestSketch.tdigestQuantile(col("digest"), 0.5).as("med"))
+          graft.functions.Kll.quantile(col("digest"), 0.5).as("med"))
       val ev = t(s, dir, "events").where(col("value").isNotNull)
         .select((floor(unix_timestamp(col("ts")) / 14400) * 14400).cast("long")
           .as("window_start"), col("value"))

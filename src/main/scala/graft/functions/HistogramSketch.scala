@@ -13,8 +13,8 @@ import java.nio.ByteBuffer
 
 /** Single-pass fixed-width histogram as a native Catalyst aggregate — the
   * engine's custom-sketch extension point (SURVEY.md §2.7/§4: custom
-  * `TypedImperativeAggregate` for drift sketches; the same shape a t-digest
-  * would use, with a simpler mergeable state).
+  * `TypedImperativeAggregate` for drift sketches; the quantile sketch is
+  * Spark's built-in KLL, see [[Kll]]).
   *
   * vs `groupBy(bin).count()`: ONE aggregation with a bins-sized mutable
   * buffer per partition — no per-bin shuffle rows, works inside any

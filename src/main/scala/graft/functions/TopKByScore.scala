@@ -34,7 +34,7 @@ import scala.collection.mutable
   *
   * Output: `array<struct<score double, id long>>` in rank order (element
   * i = rank i+1) — `posexplode` reconstructs the window's rank column.
-  * NULL ids are skipped (ids are never null in the ANN tables). */
+  * A NULL id fails the query (see [[requireId]]). */
 case class TopKByScore(
     left: Expression,   // score (DOUBLE, nullable)
     right: Expression,  // id (LONG)
@@ -92,13 +92,20 @@ case class TopKByScore(
   override def update(buf: mutable.PriorityQueue[(java.lang.Double, Long)],
       input: InternalRow): mutable.PriorityQueue[(java.lang.Double, Long)] = {
     val idv = right.eval(input)
-    if (idv != null) {
-      val sv = left.eval(input)
-      offer(buf, (if (sv == null) null else java.lang.Double.valueOf(sv.asInstanceOf[Double]),
-        idv.asInstanceOf[Long]))
-    }
+    requireId(idv)
+    val sv = left.eval(input)
+    offer(buf, (if (sv == null) null else java.lang.Double.valueOf(sv.asInstanceOf[Double]),
+      idv.asInstanceOf[Long]))
     buf
   }
+
+  /** The row_number window this aggregate replaces ranks NULL-id rows too;
+    * dropping them would return a plausible but different top-k, so fail
+    * loudly instead. */
+  private def requireId(id: Any): Unit =
+    require(id != null,
+      "topk_by_score got a NULL id, which the row_number window it replaces would rank; " +
+        "filter or coalesce NULL ids before the aggregate")
 
   override def merge(a: mutable.PriorityQueue[(java.lang.Double, Long)],
       b: mutable.PriorityQueue[(java.lang.Double, Long)]): mutable.PriorityQueue[(java.lang.Double, Long)] = {

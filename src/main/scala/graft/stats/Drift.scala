@@ -12,12 +12,11 @@ import org.apache.spark.sql.functions._
   * counts are exact integers (deterministic across partitionings and
   * engines); only the final PSI/KL arithmetic is floating point.
   *
-  * For quantile-based drift the stored reference sketch is the engine's
-  * own t-digest ([[graft.functions.TDigestSketch]], the north_star's named
-  * sketch): [[psiSketched]]/[[klSketched]] compute the drift distance from
-  * two digests via `tdigest_cdf` without rescanning either snapshot; the
-  * built-in `percentile_approx` (KLL-style; PAPERS.md quantile-sketch
-  * survey) remains available where only point quantiles are needed.
+  * For quantile-based drift the stored sketch is Spark's built-in KLL at
+  * k = 8000 ([[graft.functions.Kll]]): [[psiSketched]]/[[klSketched]]/
+  * [[jsSketched]] compute the drift distance from two sketches via their
+  * rank function without rescanning either snapshot, within 0.0017 of the
+  * exact distance on the adversarial cases of `KllSketchSpec`.
   */
 object Drift {
 
@@ -123,60 +122,67 @@ object Drift {
       .agg(sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"))
   }
 
-  /** Per-bin (p, q) proportions derived from two t-digest SKETCHES instead
-    * of exact histograms: bin mass = `cdf(hi) − cdf(lo)` on each digest,
-    * edge bins absorb the tails (cdf is monotone, so masses are
-    * non-negative and sum to 1 — the same clamp contract as
-    * [[histogram]]). This is the north_star's "t-digest quantile sketches
-    * for distribution-drift checks" composed end to end: each snapshot is
-    * ONE digest aggregation (O(compression) state), and the drift
-    * arithmetic runs on the two stored artifacts — re-checking against a
-    * month of snapshots rescans nothing. */
-  private def digestProportions(reference: DataFrame, current: DataFrame,
-      valueCol: String, lo: Double, hi: Double, bins: Int,
-      compression: Double, eps: Double): DataFrame = {
-    import graft.functions.TDigestSketch.{tdigestSketch, tdigestCdf}
-    graft.functions.TDigestSketch.register(reference.sparkSession)
-    val rd = reference.agg(tdigestSketch(col(valueCol), compression).as("dref"))
-    val cd = current.agg(tdigestSketch(col(valueCol), compression).as("dcur"))
+  /** Epsilon clamp of the sketched proportions, as in [[psi]]'s default. */
+  private val SketchEps = 1e-6
+
+  /** Per-bin (p, q) proportions derived from two KLL SKETCHES instead of
+    * exact histograms: bin mass = `rank(hi) − rank(lo)` on each sketch,
+    * edge bins absorb the tails (rank is monotone, so masses are
+    * non-negative and sum to 1: the same clamp contract as [[histogram]]).
+    * This is the north_star's "quantile sketches for distribution-drift
+    * checks" composed end to end: each snapshot is ONE sketch aggregation
+    * (bounded state), and the drift arithmetic runs on the two stored
+    * artifacts, so re-checking against a month of snapshots rescans
+    * nothing. An empty snapshot (no non-null, non-NaN value) has no
+    * distribution to compare and fails the query. */
+  private def sketchProportions(reference: DataFrame, current: DataFrame,
+      valueCol: String, lo: Double, hi: Double, bins: Int): DataFrame = {
+    import graft.functions.Kll
+    val rd = reference.agg(Kll.sketch(col(valueCol)).as("dref"))
+    val cd = current.agg(Kll.sketch(col(valueCol)).as("dcur"))
+    def nonEmpty(d: String, side: String): Column =
+      when(Kll.n(col(d)) > 0, col(d)).otherwise(raise_error(lit(
+        s"sketched drift: the $side snapshot has no non-null, non-NaN " +
+          s"'$valueCol' value, so there is no distribution to compare"))).as(d)
     val width = (hi - lo) / bins
+    // rank is P(X <= x); the value just below an edge gives P(X < edge),
+    // which bins an on-edge value upward exactly like [[histogram]]
+    def below(edge: Int): Double = math.nextDown(lo + edge * width)
     val rows = (0 until bins).map { i =>
       def mass(d: String): Column = {
-        val pl = if (i == 0) lit(0.0) else tdigestCdf(col(d), lo + i * width)
-        val ph = if (i == bins - 1) lit(1.0) else tdigestCdf(col(d), lo + (i + 1) * width)
+        val pl = if (i == 0) lit(0.0) else Kll.rank(col(d), below(i))
+        val ph = if (i == bins - 1) lit(1.0) else Kll.rank(col(d), below(i + 1))
         ph - pl
       }
       struct(lit(i).as("bin"), mass("dref").as("p"), mass("dcur").as("q"))
     }
     rd.crossJoin(cd) // 1×1: two sketch rows, no data motion
+      .select(nonEmpty("dref", "reference"), nonEmpty("dcur", "current"))
       .select(explode(array(rows: _*)).as("s"))
       .select(col("s.bin").as("bin"),
-        greatest(col("s.p"), lit(eps)).as("p"),
-        greatest(col("s.q"), lit(eps)).as("q"))
+        greatest(col("s.p"), lit(SketchEps)).as("p"),
+        greatest(col("s.q"), lit(SketchEps)).as("q"))
   }
 
-  /** PSI computed from two t-digest sketches (see [[digestProportions]]);
-    * agrees with the exact [[psi]] to within the digest's rank error —
-    * pinned by spec and by the v47 oracle's tolerance verdict. */
+  /** PSI computed from two KLL sketches (see [[sketchProportions]]);
+    * agrees with the exact [[psi]] to within the sketch's rank error,
+    * pinned by `KllSketchSpec` and by the v47 oracle's tolerance verdict. */
   def psiSketched(reference: DataFrame, current: DataFrame, valueCol: String,
-      lo: Double, hi: Double, bins: Int,
-      compression: Double = 300, eps: Double = 1e-6): DataFrame =
-    digestProportions(reference, current, valueCol, lo, hi, bins, compression, eps)
+      lo: Double, hi: Double, bins: Int): DataFrame =
+    sketchProportions(reference, current, valueCol, lo, hi, bins)
       .agg(sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"))
 
-  /** KL(P || Q) from two t-digest sketches. */
+  /** KL(P || Q) from two KLL sketches. */
   def klSketched(reference: DataFrame, current: DataFrame, valueCol: String,
-      lo: Double, hi: Double, bins: Int,
-      compression: Double = 300, eps: Double = 1e-6): DataFrame =
-    digestProportions(reference, current, valueCol, lo, hi, bins, compression, eps)
+      lo: Double, hi: Double, bins: Int): DataFrame =
+    sketchProportions(reference, current, valueCol, lo, hi, bins)
       .agg(sum(col("p") * log(col("p") / col("q"))).as("kl"))
 
-  /** Jensen–Shannon divergence from two t-digest sketches — the bounded
+  /** Jensen–Shannon divergence from two KLL sketches: the bounded
     * symmetric member, same shape as [[js]]. */
   def jsSketched(reference: DataFrame, current: DataFrame, valueCol: String,
-      lo: Double, hi: Double, bins: Int,
-      compression: Double = 300, eps: Double = 1e-6): DataFrame =
-    digestProportions(reference, current, valueCol, lo, hi, bins, compression, eps)
+      lo: Double, hi: Double, bins: Int): DataFrame =
+    sketchProportions(reference, current, valueCol, lo, hi, bins)
       .select(col("p"), col("q"), ((col("p") + col("q")) / 2).as("m"))
       .agg(sum(col("p") * log(col("p") / col("m")) * 0.5
         + col("q") * log(col("q") / col("m")) * 0.5).as("js"))

@@ -179,15 +179,20 @@ class SnapshotStore(root: String, spark: SparkSession) {
     * amortized over every rerun. `sortBy` additionally orders each bucket
     * file so min/max row-group stats stay selective on the key.
     *
-    * Caveats: bucketed writes require a catalog table (`saveAsTable`),
-    * and the no-shuffle read needs the reader's
-    * `spark.sql.sources.bucketing.enabled` (default true). Pick
-    * `numBuckets` so each bucket lands near the 128 MB-1 GB file band at
-    * production volume. */
+    * Bucketed writes require a catalog table (`saveAsTable`); it is an
+    * external table whose files live under `<root>/bucketed/<table>`, so
+    * the snapshot stays inside the store's layout. `table` must be a plain
+    * identifier (letters, digits, underscores). The no-shuffle read needs
+    * the reader's `spark.sql.sources.bucketing.enabled` (default true).
+    * Pick `numBuckets` so each bucket lands near the 128 MB-1 GB file band
+    * at production volume. */
   def writeBucketed(df: DataFrame, table: String, keyCols: Seq[String],
       numBuckets: Int): Unit = {
     require(keyCols.nonEmpty && numBuckets > 0)
+    require(table.matches("[A-Za-z_][A-Za-z0-9_]*"),
+      s"bucketed table name must be a plain identifier, got '$table'")
     df.write.mode("overwrite").format("parquet")
+      .option("path", s"$root/bucketed/$table")
       .bucketBy(numBuckets, keyCols.head, keyCols.drop(1): _*)
       .sortBy(keyCols.head, keyCols.drop(1): _*)
       .saveAsTable(table)

@@ -77,4 +77,13 @@ class TopKByScoreSpec extends SparkSuite {
       assert(canon(aggTopK(df, 5, asc)) === canon(windowTopK(df, 5, asc)),
         s"asc=$asc")
   }
+
+  test("a NULL id fails the query instead of being dropped") {
+    import spark.implicits._
+    val df = Seq((1L, Some(10L), 0.5), (1L, None, 0.9)).toDF("q", "id", "score")
+    val e = intercept[Exception](aggTopK(df, 5, asc = false).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(msgs.contains("NULL id"), msgs)
+  }
 }

@@ -102,6 +102,13 @@ class SnapshotStoreSpec extends SparkSuite {
       (col("id") % 7).as("v"))
     val table = "snap_bucketed_spec"
     store.writeBucketed(df, table, Seq("doc_id"), numBuckets = 8)
+    // the table's files live under the store root, not the session warehouse
+    val files = new java.io.File(s"$root/bucketed/$table").listFiles()
+    assert(files != null && files.exists(_.getName.endsWith(".parquet")),
+      s"no bucket files under $root/bucketed/$table")
+    assert(intercept[IllegalArgumentException](
+      store.writeBucketed(df, "default.t; x", Seq("doc_id"), numBuckets = 8))
+      .getMessage.contains("plain identifier"))
     val bucketed = store.readBucketed(table)
 
     val dupB = graft.global.Uniqueness.duplicateKeys(bucketed, Seq("doc_id"))
